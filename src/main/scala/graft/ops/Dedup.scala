@@ -3,8 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.synthweb.SyntheticWeb.mix64
-
 /** Deduplication operators for web-scale corpora: exact, MinHash+LSH,
   * SimHash and exact n-gram Jaccard. All are expressed as declarative
   * DataFrame plans so Catalyst handles pushdown/pruning; the only
@@ -47,9 +45,7 @@ object Dedup {
   /** Word n-gram (shingle) array, distinct (first occurrence wins),
     * from a text column. Texts with fewer than n words yield an empty
     * array (matches the SQL-oracle formulation exactly). One-pass
-    * codegen'd expression — the former transform/slice/array_join chain
-    * evaluated as interpreted higher-order functions and was the dedup
-    * family's dominant CPU cost at corpus scale.
+    * codegen'd expression.
     */
   def shingles(c: Column, n: Int): Column =
     HashOps.shingles_col(TextOps.words(c), n)
@@ -66,20 +62,20 @@ object Dedup {
     * buckets; pairs sharing any bucket are verified with exact Jaccard
     * over shingle sets and kept when >= threshold.
     *
-    * Scale shape: the banded exchange carries (band, bucket, id) rows
-    * ONLY — shingle arrays never replicate bands× through the shuffle;
-    * they are joined back exactly once per surviving candidate pair.
-    * Buckets are capped at `maxBucket` rows ([[LshPairs.cappedIdPairs]])
-    * so a near-identical-heavy corpus cannot blow one task up
-    * quadratically; drops are counted in a named accumulator.
+    * Contract. At threshold 1.0 the output is exactly the pairs with
+    * equal shingle sets (equal sets give equal signatures, so they share
+    * every band), unless bucket caps drop the pair from every band. Below
+    * 1.0 it is a bounded subset of the exact-Jaccard pairs at that
+    * threshold: every emitted pair is verified exactly, so there are no
+    * false positives, but a pair whose signatures share no band is never
+    * a candidate, so recall is the banding's collision probability, not
+    * 1. Use [[ngramJaccardPairs]] when every pair is required.
     *
-    * The shingle computation executes once over the corpus (banding)
-    * plus twice over the PAIR-SURVIVING ids only: the verification
-    * lookup is pruned by a semi join against the materialized pair
-    * set's ids before shingling, so the join-back branches recompute
-    * (and potentially shuffle) shingles for O(pairs) rows, not
-    * O(corpus) — the recompute-over-shuffle trade now applies to the
-    * sliver that actually needs verification.
+    * Scale shape: the banded exchange carries (band, bucket, id[, tag])
+    * rows only; shingle arrays join back once per surviving candidate
+    * pair ([[LshPairs.verifyJoin]]). Buckets are capped at `maxBucket`
+    * rows so a near-identical-heavy corpus cannot blow one task up
+    * quadratically; drops are counted in a named accumulator.
     *
     * Returns (id_a, id_b, jaccard) with id_a < id_b.
     */
@@ -94,22 +90,14 @@ object Dedup {
     // imply equal minhash signatures, so a candidate pair with ANY
     // differing signature slot cannot reach jaccard 1.0. The prefilter
     // rides INSIDE pair generation as a per-row tag (a hash of the full
-    // signature, compared within buckets by cappedIdPairs): a near-dup-
-    // heavy corpus generates O(family²) candidates, and suppressing the
-    // non-identical ones at emission keeps the pair set, its
-    // dropDuplicates exchange and the shingle verification at the
-    // true-duplicate scale. Tag hash collisions only admit extra
-    // candidates, which the exact verification below removes.
+    // signature), so the pair set stays at the true-duplicate scale and
+    // the verify join pins and prunes it (LshPairs' prune rule). Below
+    // 1.0 no prefilter exists and the verify join stays one action.
     //
     // Signatures come from the FUSED words->gram-hash MinHash kernel
-    // (HashOps.minhashText): the banding path only ever hashes the
-    // shingle strings, so the word array and every gram string are
-    // never materialized here — bit-identical signatures (FNV is
-    // byte-sequential; a per-slot min is duplicate-insensitive), with
-    // the < shingleN-words rows dropped by the same null the composed
-    // form's size(sh) > 0 filter encoded. Shingle ARRAYS are still
-    // computed below for verification — in exactOnly mode only for the
-    // pair-surviving sliver.
+    // (HashOps.minhashText): the word array and every gram string are
+    // never materialized for banding; rows with < shingleN words come
+    // back null and are dropped.
     val exactOnly = threshold >= 1.0
     val banded = df
       .select(col(idCol).cast("long").as("id"),
@@ -118,60 +106,31 @@ object Dedup {
       .filter(col("sig").isNotNull)
       .select(
         col("id") +: (if (exactOnly) Seq(xxhash64(col("sig")).as("tag")) else Nil) :+
-        // codegen'd one-pass banding (HashOps.bandBuckets) — buckets are
-        // bit-identical to the former transform/slice/xxhash64 chain,
-        // which evaluated as interpreted higher-order functions
         posexplode(HashOps.band_buckets_col(col("sig"), rowsPerBand))
           .as(Seq("band", "bucket")): _*)
+    val cand = LshPairs.cappedIdPairs(banded, maxBucket, acc, matchTag = exactOnly)
+    // pinned, shingles are computed only for the pair-surviving ids;
+    // unpinned, rows without shingles (they never pair) drop before the
+    // joins
+    val texts = df.select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
+    LshPairs.verifyJoin(
+        cand,
+        if (exactOnly) texts else texts.filter(size(shingles(col("text"), shingleN)) > 0),
+        pinned = exactOnly, payload = shingles(_, shingleN))
+      .transform(jaccardAtLeast(threshold))
+  }
 
-    // Verification strategy splits on the mode:
-    //  - exactOnly (the at-scale/pipeline setting): the pair set is
-    //    pinned once (localCheckpoint: candidate generation must not
-    //    re-execute per consumer) and COUNTED, then the verification
-    //    lookup is PRUNED to ids that actually appear in a surviving
-    //    pair — shingle arrays are recomputed (and, under a
-    //    non-broadcast plan, shuffled) only for that sliver of the
-    //    corpus instead of every row, twice. Both the id set (semi
-    //    join) and the pair set (verify joins) carry a measured-size
-    //    broadcast guard: when they fit the session threshold every
-    //    corpus touch stays map-side.
-    //  - threshold < 1.0 (bounded-subset similarity search): no tag
-    //    prefilter exists, so the candidate set is O(bucket overlap) of
-    //    the input and the pruning machinery's extra actions (eager
-    //    checkpoint + count) cost more than shingling the corpus once.
-    //    One action, the capped-pair exchange reused across both verify
-    //    joins — the measured fixture-scale shape.
-    val candRaw = LshPairs.cappedIdPairs(banded, maxBucket, acc,
-                                         matchTag = exactOnly)
-    val (pairSide, lookup) =
-      if (exactOnly) {
-        val cand = candRaw.localCheckpoint()
-        val nCand = cand.count()
-        val pairIds = cand
-          .select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
-        val idsSide = LshPairs.broadcastIfFits(pairIds, 2L * nCand, 24L)
-        val lk = df
-          .select(col(idCol).cast("long").as("id"), col(textCol).as("__mnd_text"))
-          .join(idsSide, Seq("id"), "left_semi")
-          .select(col("id"), shingles(col("__mnd_text"), shingleN).as("sh"))
-        (LshPairs.broadcastIfFits(cand, nCand, 48L), lk)
-      } else {
-        val lk = df
-          .select(col(idCol).cast("long").as("id"),
-                  shingles(col(textCol), shingleN).as("sh"))
-          .filter(size(col("sh")) > 0)
-        (candRaw, lk)
-      }
-    pairSide
-      .join(lookup.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(lookup.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast("double"))
-      .withColumn("uni", size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
+  /** (id_a, id_b, jaccard) of verified pairs whose shingle sets
+    * (payload_a, payload_b) reach `threshold`, compared before rounding.
+    */
+  private[ops] def jaccardAtLeast(threshold: Double)(pairs: DataFrame): DataFrame =
+    pairs
+      .withColumn("inter", size(array_intersect(col("payload_a"), col("payload_b"))).cast("double"))
+      .withColumn("uni", size(array_union(col("payload_a"), col("payload_b"))).cast("double"))
       .withColumn("jaccard_raw", col("inter") / greatest(col("uni"), lit(1.0)))
       .filter(col("jaccard_raw") >= threshold) // filter BEFORE rounding
       .withColumn("jaccard", round(col("jaccard_raw"), 4))
       .select("id_a", "id_b", "jaccard")
-  }
 
   /** 64-bit SimHash over word tokens, computed in one pass by the
     * codegen'd [[graft.ops.SimHash64Expression]]. Row-local.
@@ -192,10 +151,9 @@ object Dedup {
       posexplode(array((0 until 4).map(b =>
         shiftright(col("sim"), b * 16).bitwiseAND(lit(0xffffL))): _*))
         .as(Seq("band", "bucket")))
-    LshPairs.cappedIdPairs(banded, maxBucket)
-      .join(base.select(col("id").as("id_a"), col("sim").as("sim_a")), "id_a")
-      .join(base.select(col("id").as("id_b"), col("sim").as("sim_b")), "id_b")
-      .withColumn("hamming", bit_count(col("sim_a").bitwiseXOR(col("sim_b"))))
+    LshPairs.verifyJoin(LshPairs.cappedIdPairs(banded, maxBucket), base,
+                        pinned = false)
+      .withColumn("hamming", bit_count(col("payload_a").bitwiseXOR(col("payload_b"))))
       .filter(col("hamming") <= maxHamming)
       .select("id_a", "id_b", "hamming")
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.LongAccumulator
 
-import graft.ops.Similarity.{Scored, cosine, nearestCell, probeCells, signatureAt}
+import graft.ops.Similarity.{Scored, cosine, nearestCell, probeCells}
 
 /** Incremental maintenance for the EMBEDDING indexes — the vector-side
   * analogue of [[IncrementalLsh]] (which maintains the text MinHash
@@ -20,10 +20,11 @@ import graft.ops.Similarity.{Scored, cosine, nearestCell, probeCells, signatureA
   *     vectors against the index only. Union of per-round outputs
   *     equals the batch output (oracled as q63): hyperplane signatures
   *     do not depend on arrival round, so end-state bucket membership
-  *     is batch membership. Pair generation reuses
-  *     [[IncrementalLsh.cappedNewPairs]] — old-old pairs were emitted
-  *     in an earlier round, buckets are capped with counted drops, and
-  *     the exact-cosine verify join is broadcast-size-guarded.
+  *     is batch membership. Pair generation is
+  *     [[LshPairs.cappedNewPairs]] — old-old pairs were emitted in an
+  *     earlier round, buckets are capped with counted drops — and the
+  *     exact-cosine verify is [[LshPairs.verifyJoin]], pinned and
+  *     pruned, inside [[RoundSlots.bandIndexRound]].
   *   - [[IvfIndex]] — a persisted IVF postings table for ANN top-k
   *     queries: cell assignments are APPENDED per round against FROZEN
   *     centroids (assignment is a map-side broadcast pass over the new
@@ -46,45 +47,15 @@ object IncrementalAnn {
     */
   def bands(emb: DataFrame, idCol: String, vecCol: String,
             tables: Int = 8, bits: Int = 10, seed: Long = 7L): DataFrame =
-    // one codegen'd pass per row (HashOps.hyperplaneSigs) — signatures
-    // bit-identical to the former per-table signatureAt mapPartitions,
-    // without decoding every vector into an external Array[Float]
-    emb.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
-      .select(col("id"),
-              posexplode(HashOps.hyperplane_sigs_col(col("vec"), tables, bits,
-                                                     seed))
-                .as(Seq("band", "bucket")))
-      .select(col("band"), col("bucket"), col("id"))
-
-  // table dirs live inside the ACTIVE generation (RoundSlots'
-  // compaction layer — same LSM fold as [[IncrementalLsh.compact]])
-  private def bandsDir(indexDir: String) =
-    s"${RoundSlots.genDir(indexDir, RoundSlots.activeGen(indexDir))}/bands"
-  private def vecsDir(indexDir: String) =
-    s"${RoundSlots.genDir(indexDir, RoundSlots.activeGen(indexDir))}/vecs"
+    LshPairs.hyperplaneBands(
+      emb.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec")),
+      tables, bits, seed)
 
   /** Fold all complete rounds into a fresh single-slot generation and
     * drop superseded generations (crash-safe, marker-committed).
     */
-  def compact(spark: SparkSession, indexDir: String): Boolean = {
-    val folded = RoundSlots.compactTables(spark, indexDir,
-                                          Seq("bands", "vecs"))
-    if (folded) RoundSlots.gcOldGenerations(indexDir)
-    folded
-  }
-
-  private def completeRounds(indexDir: String): Seq[Int] =
-    RoundSlots.completeRounds(Seq(bandsDir(indexDir), vecsDir(indexDir)))
-
-  private def readRounds(spark: SparkSession, dir: String, rounds: Seq[Int],
-                         empty: DataFrame): DataFrame =
-    if (rounds.isEmpty) empty
-    // explicit schema (from the caller's empty frame): a committed slot
-    // whose round held zero rows has a _SUCCESS marker and no part
-    // files, and schema INFERENCE over such slots throws — wedging
-    // every later read of the index. An empty round is valid state.
-    else spark.read.schema(empty.schema)
-      .parquet(rounds.map(k => s"$dir/r$k"): _*)
+  def compact(spark: SparkSession, indexDir: String): Boolean =
+    RoundSlots.compactBandIndex(spark, indexDir, "vecs")
 
   /** One maintenance round: verified cosine near-dup pairs of `newEmb`
     * against the persisted index (and among themselves), then the index
@@ -93,14 +64,9 @@ object IncrementalAnn {
     * Returns (id_a, id_b, cosine) with id_a < id_b — the same output
     * contract as [[Similarity.cosineNearDups]]. Vectors never ride the
     * banded exchange (ids only); they join back once per surviving
-    * capped candidate pair, broadcast-guarded by measured pair count
-    * ([[IncrementalLsh.joinPairsToLookup]]).
-    */
-  /** `slot`: same replay-idempotency contract as
-    * [[IncrementalLsh.roundPairs]] — pin the round slot to an external
-    * round number so an at-least-once driver's retry re-reads exactly
-    * rounds 0..k-1 and overwrites slot k instead of appending a
-    * duplicate beside its own earlier attempt.
+    * capped candidate pair. `slot` and `compactEvery` follow
+    * [[RoundSlots.bandIndexRound]], the same replay contract as
+    * [[IncrementalLsh.roundPairs]].
     */
   def roundPairs(spark: SparkSession, indexDir: String, newEmb: DataFrame,
                  idCol: String, vecCol: String, threshold: Double,
@@ -110,63 +76,22 @@ object IncrementalAnn {
                  compactEvery: Int = 0,
                  slot: Option[Int] = None): DataFrame = {
     import spark.implicits._
-    require(slot.isEmpty || compactEvery == 0,
-            "slot-pinned rounds cannot combine with compactEvery " +
-              "(generation folds renumber slots)")
-    val newVecs = newEmb
-      .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
-      .persist()
-    // bands from the PERSISTED (id, vec) slice, not the caller's
+    // bands derive from the PERSISTED (id, vec) slice, not the caller's
     // source plan — one source scan per round, and bands/vecs cannot
-    // disagree if the source is nondeterministic. The banding itself is
-    // ALSO persisted: it has three consumers (pair generation's grouped
-    // side, its touched-bucket semi-join build side, and the index
-    // append below), each of which would otherwise re-run the signature
-    // pass over the round's slice.
-    val newBands = bands(newVecs, "id", "vec", tables, bits, seed).persist()
-    val complete = slot match {
-      case None => completeRounds(indexDir)
-      case Some(k) =>
-        val prior = completeRounds(indexDir).filter(_ < k)
-        require(prior == (0 until k),
-                s"slot $k requires committed rounds 0..${k - 1}, found $prior")
-        prior
+    // disagree if the source is nondeterministic
+    RoundSlots.bandIndexRound(
+        spark, indexDir, "vecs",
+        emptyBands = Seq.empty[(Int, Long, Long)].toDF("band", "bucket", "id"),
+        emptyPayload = spark.emptyDataset[(Long, Array[Float])].toDF("id", "vec"),
+        newPayload = newEmb.select(col(idCol).cast("long").as("id"),
+                                   col(vecCol).as("vec")),
+        bandsOf = bands(_, "id", "vec", tables, bits, seed),
+        slot = slot, compactEvery = compactEvery) { (oldBands, newBands, vecs) =>
+      LshPairs.verifyJoin(
+          LshPairs.cappedNewPairs(oldBands, newBands, maxBucket, acc),
+          vecs, pinned = true)
+        .transform(Similarity.cosineAtLeast(threshold))
     }
-    val oldBands = readRounds(spark, bandsDir(indexDir), complete,
-                              Seq.empty[(Int, Long, Long)].toDF("band", "bucket", "id")
-                                .select(col("band"), col("bucket"), col("id")))
-    val oldVecs = readRounds(spark, vecsDir(indexDir), complete,
-                             spark.emptyDataset[(Long, Array[Float])]
-                               .toDF("id", "vec"))
-    val pairsRaw = IncrementalLsh
-      .cappedNewPairs(oldBands, newBands, maxBucket, acc)
-      .localCheckpoint()
-    val nPairRows = pairsRaw.count()
-    // vector lookup: old store + this round's slice (ids are globally
-    // unique across rounds — enforced by the caller's round partition),
-    // PRUNED to pair-surviving ids so untouched index vectors are
-    // dropped right after the scan instead of riding the verify join
-    val pairIds = IncrementalLsh.broadcastPairIds(pairsRaw, nPairRows)
-    val lookup = oldVecs.select(col("id"), col("vec")).unionByName(newVecs)
-      .join(pairIds, Seq("id"), "left_semi")
-    // codegen'd verify kernel (HashOps.cosineRint4 — Similarity.cosine's
-    // exact fold + the rint rounding): no per-pair external decode of
-    // two float arrays across the candidate set
-    val pairs = IncrementalLsh
-      .joinPairsToLookup(spark, pairsRaw, nPairRows, lookup)
-      .select(col("id_a"), col("id_b"),
-              HashOps.cosine_rint4_col(col("payload_a"), col("payload_b"))
-                .as("cosine"))
-      .filter(col("cosine") >= threshold)
-      .localCheckpoint() // force BEFORE the append mutates the index
-    val k = slot.getOrElse(complete.size)
-    newBands.write.mode("overwrite").parquet(s"${bandsDir(indexDir)}/r$k")
-    newVecs.write.mode("overwrite").parquet(s"${vecsDir(indexDir)}/r$k")
-    newBands.unpersist()
-    newVecs.unpersist()
-    // LSM fold on the caller's cadence: bounded slot count, same data
-    if (compactEvery > 0 && k + 1 >= compactEvery) compact(spark, indexDir)
-    pairs
   }
 
   // ------------------------------------------------------------------
@@ -423,17 +348,7 @@ object IncrementalAnn {
         .as[(Long, Long, Array[Float], Array[Float])]
         .filter(t => !qSet.contains(t._2))
         .map { case (q, id, qv, v) => Scored(q, id, cosine(qv, v)) }
-      implicit val ord: Ordering[Scored] =
-        Ordering.by((s: Scored) => (-s.sim, s.neighbor_id))
-      scored.groupByKey(_.query_id)
-        .flatMapGroups { (_: Long, it: Iterator[Scored]) =>
-          val heap = scala.collection.mutable.PriorityQueue.empty[Scored](ord)
-          it.foreach { s =>
-            if (heap.size < k) heap.enqueue(s)
-            else if (ord.lt(s, heap.head)) { heap.dequeue(); heap.enqueue(s) }
-          }
-          heap.dequeueAll.sorted(ord)
-        }
+      Similarity.topKPerQuery(scored, k)
     }
   }
 }

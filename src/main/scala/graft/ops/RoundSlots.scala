@@ -1,5 +1,7 @@
 package graft.ops
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Per-round slot commit protocol shared by the incremental index
   * maintainers ([[IncrementalLsh]], [[IncrementalAnn]]).
   *
@@ -133,7 +135,7 @@ private[graft] object RoundSlots {
     * without it a per-ingest-round index accumulates directories
     * forever and pays growing listing/footer overhead per read.
     */
-  def compactTables(spark: org.apache.spark.sql.SparkSession,
+  def compactTables(spark: SparkSession,
                     indexDir: String, tables: Seq[String]): Boolean = {
     val j = activeGen(indexDir)
     val rounds = completeRounds(tables.map(t => s"${genDir(indexDir, j)}/$t"))
@@ -157,4 +159,105 @@ private[graft] object RoundSlots {
     */
   def gcOldGenerations(indexDir: String): Unit =
     gcBelow(indexDir, "g", activeGen(indexDir))
+
+  // ------------------------------------------------------------------
+  // the round driver of an incremental band index
+  // ------------------------------------------------------------------
+  //
+  // A band index ([[IncrementalLsh]], [[IncrementalAnn]]) is two tables
+  // in the active generation: `bands` (band, bucket, id[, tag]) postings
+  // and one payload table (id, payload) that verification joins back.
+
+  private def tableDir(indexDir: String, table: String): String =
+    s"${genDir(indexDir, activeGen(indexDir))}/$table"
+
+  /** Fold all complete rounds of a band index into a fresh single-slot
+    * generation (crash-safe, marker-committed) and drop superseded
+    * generations. Returns whether a fold happened.
+    */
+  def compactBandIndex(spark: SparkSession, indexDir: String,
+                       payload: String): Boolean = {
+    val folded = compactTables(spark, indexDir, Seq("bands", payload))
+    if (folded) gcOldGenerations(indexDir)
+    folded
+  }
+
+  private def readRounds(spark: SparkSession, dir: String, rounds: Seq[Int],
+                         empty: DataFrame): DataFrame =
+    if (rounds.isEmpty) empty
+    // explicit schema (from the caller's empty frame): a committed slot
+    // whose round held zero rows (e.g. a micro-batch where every doc
+    // fell below shingleN words) has a _SUCCESS marker and no part
+    // files, and schema INFERENCE over such slots throws — wedging the
+    // index and, through the streaming sinks, replaying the same batch
+    // forever. An empty round is valid state.
+    else spark.read.schema(empty.schema)
+      .parquet(rounds.map(k => s"$dir/r$k"): _*)
+
+  /** One maintenance round of the band index under `indexDir`.
+    *
+    * `newPayload` is the round's (id, payload) slice and `bandsOf`
+    * derives its postings; both are persisted for the round (pair
+    * generation, its touched-bucket semi-join and the append each
+    * consume them). `emptyBands`/`emptyPayload` give the tables' read
+    * schemas. `pairsOf(oldBands, newBands, payloads)` computes the
+    * round's result against the PRE-append index, `payloads` being every
+    * committed payload row plus the new slice; the result is
+    * materialized before the round's slot is written, then the index is
+    * compacted on the `compactEvery` cadence.
+    *
+    * The round reads only rounds committed in BOTH tables (see the
+    * object doc), and writes slot k = one past the last complete round —
+    * a dangling slot from a died append is overwritten, never appended
+    * beside, so ids never repeat across "old" rounds (which would break
+    * [[LshPairs.cappedNewPairs]]' disjoint-ids precondition and admit
+    * self-pairs).
+    *
+    * `slot`: pin the round's slot (and the set of rounds read as "old")
+    * to an EXTERNAL round number instead of deriving it from the slot
+    * count. Required for at-least-once drivers (Structured Streaming
+    * foreachBatch): a replayed batch k re-reads exactly rounds 0..k-1
+    * and overwrites slot k — bit-identical recompute, never a duplicate
+    * append beside its own earlier attempt. Requires rounds 0..k-1 all
+    * committed (streaming delivers batches in order, so a gap means
+    * external corruption — fail loud) and is incompatible with
+    * compactEvery (generation folds renumber slots).
+    */
+  def bandIndexRound(spark: SparkSession, indexDir: String, payload: String,
+                     emptyBands: DataFrame, emptyPayload: DataFrame,
+                     newPayload: DataFrame, bandsOf: DataFrame => DataFrame,
+                     slot: Option[Int], compactEvery: Int)
+                    (pairsOf: (DataFrame, DataFrame, DataFrame) => DataFrame)
+      : DataFrame = {
+    require(slot.isEmpty || compactEvery == 0,
+            "slot-pinned rounds cannot combine with compactEvery " +
+              "(generation folds renumber slots)")
+    val newP = newPayload.persist()
+    val newBands = bandsOf(newP).persist()
+    val committed = completeRounds(Seq(tableDir(indexDir, "bands"),
+                                       tableDir(indexDir, payload)))
+    val complete = slot match {
+      case None => committed
+      case Some(k) =>
+        val prior = committed.filter(_ < k)
+        require(prior == (0 until k),
+                s"slot $k requires committed rounds 0..${k - 1}, found $prior")
+        prior
+    }
+    val oldBands = readRounds(spark, tableDir(indexDir, "bands"), complete,
+                              emptyBands)
+    val oldPayload = readRounds(spark, tableDir(indexDir, payload), complete,
+                                emptyPayload)
+    val pairs = pairsOf(oldBands, newBands, oldPayload.unionByName(newP))
+      .localCheckpoint() // force BEFORE the append mutates the index
+    val k = slot.getOrElse(complete.size)
+    newBands.write.mode("overwrite").parquet(s"${tableDir(indexDir, "bands")}/r$k")
+    newP.write.mode("overwrite").parquet(s"${tableDir(indexDir, payload)}/r$k")
+    newBands.unpersist()
+    newP.unpersist()
+    // LSM fold on the caller's cadence: bounded slot count, same data
+    if (compactEvery > 0 && k + 1 >= compactEvery)
+      compactBandIndex(spark, indexDir, payload)
+    pairs
+  }
 }

@@ -19,7 +19,8 @@ import graft.synthweb.SyntheticWeb.mix64
   *     move). This is the verification baseline.
   *   - [[lshTopK]] — random-hyperplane LSH: each vector gets a `tables`
   *     × `bits`-bit signature; query and corpus rows join on (table,
-  *     bucket); exact cosine re-ranks within buckets. At 100 TB this
+  *     bucket) ([[LshPairs.hyperplaneBands]]); exact cosine re-ranks
+  *     within buckets. At 100 TB this
   *     touches only the bucket-colocated fraction of the corpus per
   *     query, trading recall for a ~2^bits-fold scan reduction.
   *     Hyperplane components are a pure seeded function of
@@ -65,9 +66,7 @@ object Similarity {
       .collect()
       .sortBy(_._1)
     val bc = spark.sparkContext.broadcast(queries)
-
-    implicit val ord: Ordering[Scored] =
-      Ordering.by((s: Scored) => (-s.sim, s.neighbor_id))
+    val ord = byRank
 
     val partials = emb
       .select(col(idCol).cast("long"), col(vecCol))
@@ -93,10 +92,28 @@ object Similarity {
         }
         heaps.iterator.flatMap(_.iterator)
       }
-    partials
-      .groupByKey(_.query_id)
+    topKPerQuery(partials, k)
+  }
+
+  /** Best-first order of scored neighbors: higher sim, then smaller id. */
+  private val byRank: Ordering[Scored] =
+    Ordering.by((s: Scored) => (-s.sim, s.neighbor_id))
+
+  /** The `k` best neighbors of each `query_id` under [[byRank]], best
+    * first — one bounded heap per query group.
+    */
+  private[ops] def topKPerQuery(scored: Dataset[Scored], k: Int): Dataset[Scored] = {
+    import scored.sparkSession.implicits._
+    scored.groupByKey(_.query_id)
       .flatMapGroups { (_: Long, it: Iterator[Scored]) =>
-        it.toVector.sorted(ord).take(k)
+        val ord = byRank
+        // head = worst of the kept k (the queue dequeues the ord-max)
+        val heap = mutable.PriorityQueue.empty[Scored](ord)
+        it.foreach { s =>
+          if (heap.size < k) heap.enqueue(s)
+          else if (ord.lt(s, heap.head)) { heap.dequeue(); heap.enqueue(s) }
+        }
+        heap.dequeueAll.sorted(ord)
       }
   }
 
@@ -112,12 +129,10 @@ object Similarity {
 
   /** Per-JVM memo of one table's hyperplane components, flattened
     * [bit][dim] — the values are exactly [[planeComponent]]'s, computed
-    * once instead of once per row: signatureAt previously re-derived
-    * every component via mix64 for EVERY vector (tables × bits × dim
-    * hash calls per row — ~8k at 64 dims, the dominant CPU of every
-    * signature pass at corpus scale). A table's plane block is
-    * bits × dim floats (KBs); the cache is bounded by the distinct
-    * (seed, table, bits, dim) configs a JVM ever sees.
+    * once per JVM instead of tables × bits × dim mix64 calls per row. A
+    * table's plane block is bits × dim floats (KBs); the cache is
+    * bounded by the distinct (seed, table, bits, dim) configs a JVM ever
+    * sees.
     */
   private val planeCache =
     new java.util.concurrent.ConcurrentHashMap[(Long, Int, Int, Int), Array[Float]]()
@@ -134,11 +149,10 @@ object Similarity {
       a
     })
 
-  /** `bits`-bit random-hyperplane signature of `vec` in table `t`
-    * (shared with the sequential ANN oracle in graft.oracle).
-    * Bit-identical to the uncached formulation: same component values
-    * ([[planesFor]] memoizes [[planeComponent]]), same double
-    * accumulation order.
+  /** `bits`-bit random-hyperplane signature of `vec` in table `t` — the
+    * scalar reference: the sequential ANN oracle in graft.oracle signs
+    * with it, and a spec pins [[HashOps.hyperplaneSigs]], which every
+    * operator signs with, bit-equal to it.
     */
   private[graft] def signatureAt(vec: Array[Float], seed: Long, t: Int,
                                  bits: Int): Int = {
@@ -175,8 +189,8 @@ object Similarity {
     *   - the only exchanges carry thin (query_id, table, bucket, id)
     *     rows — vectors never ride a shuffle.
     *   - every probed (table, bucket) is CAPPED to its `bucketCap`
-    *     smallest candidate ids (deterministic, O(cap) task memory),
-    *     mirroring [[LshPairs.cappedIdPairs]]: one pathological bucket
+    *     smallest candidate ids (deterministic, O(cap) task memory,
+    *     [[LshPairs.keepSmallest]]): one pathological bucket
     *     concentrates at most cap rows of downstream work instead of
     *     the whole bucket. Dropped rows are counted in the named
     *     accumulator `ann_lsh_capped_dropped_rows` (or `acc`) — same
@@ -202,25 +216,17 @@ object Similarity {
     val idRows = emb
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
     // thin signature rows — ids only, vectors stay behind
-    val sigIds = idRows
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, vec) =>
-          (0 until tables).iterator
-            .map(t => (id, t, signatureAt(vec, seed, t, bits)))
-        }
-      }
-      .toDF("id", "table", "bucket")
+    val sigIds = LshPairs.hyperplaneBands(idRows, tables, bits, seed)
+      .withColumnRenamed("band", "table")
 
     val nProbes = math.min(math.max(probes, 0), bits)
+    // exact bucket + hamming-1 probes on the first nProbes bits
     val qSigs = sigIds.filter(col("id").isin(queryIds.map(Long.box): _*))
-      .as[(Long, Int, Int)]
-      .flatMap { case (q, t, b) =>
-        // exact bucket + hamming-1 probes on the first nProbes bits
-        (b +: (0 until nProbes).map(i => b ^ (1 << i))).distinct
-          .map(pb => (q, t, pb))
-      }
-      .toDF("query_id", "table", "bucket")
+      .select(col("id").as("query_id"), col("table"),
+              explode(array_distinct(array(
+                col("bucket") +: (0 until nProbes).map(i =>
+                  col("bucket").bitwiseXOR(lit(1L << i))): _*)))
+                .as("bucket"))
     val cands = sigIds
       .join(broadcast(qSigs), Seq("table", "bucket"))
       .filter(col("id") =!= col("query_id") &&
@@ -234,14 +240,8 @@ object Similarity {
       .as[(Long, Int, Long, Long)]
       .groupByKey(t => (t._1, t._2, t._3))
       .flatMapGroups { (key: (Long, Int, Long), it: Iterator[(Long, Int, Long, Long)]) =>
-        val heap = mutable.PriorityQueue.empty[Long] // max-heap: keep smallest
-        it.foreach { t =>
-          if (heap.size < bucketCap) heap.enqueue(t._4)
-          else if (t._4 < heap.head) {
-            heap.dequeue(); heap.enqueue(t._4); dropped.add(1L)
-          } else dropped.add(1L)
-        }
-        heap.dequeueAll.iterator.map((id: Long) => (key._1, id))
+        LshPairs.keepSmallest(it, bucketCap, dropped)(_._4)
+          .iterator.map(t => (key._1, t._4))
       }
       .toDF("query_id", "id")
       .dropDuplicates("query_id", "id")
@@ -256,18 +256,7 @@ object Similarity {
       .select(col("query_id"), col("id"), col("qvec"), col("vec"))
       .as[(Long, Long, Array[Float], Array[Float])]
       .map { case (q, id, qv, v) => Scored(q, id, cosine(qv, v)) }
-
-    implicit val ord: Ordering[Scored] =
-      Ordering.by((s: Scored) => (-s.sim, s.neighbor_id))
-    scored.groupByKey(_.query_id)
-      .flatMapGroups { (_: Long, it: Iterator[Scored]) =>
-        val heap = mutable.PriorityQueue.empty[Scored](ord)
-        it.foreach { s =>
-          if (heap.size < k) heap.enqueue(s)
-          else if (ord.lt(s, heap.head)) { heap.dequeue(); heap.enqueue(s) }
-        }
-        heap.dequeueAll.sorted(ord)
-      }
+    topKPerQuery(scored, k)
   }
 
   /** Deterministic seeded k-means (Lloyd) over a small driver-side
@@ -380,19 +369,7 @@ object Similarity {
       .as[(Long, Long, Array[Float], Array[Float])]
       .filter(t => !qSet.contains(t._2))
       .map { case (q, id, qv, v) => Scored(q, id, cosine(qv, v)) }
-
-    implicit val ord: Ordering[Scored] =
-      Ordering.by((s: Scored) => (-s.sim, s.neighbor_id))
-    scored
-      .groupByKey(_.query_id)
-      .flatMapGroups { (_: Long, it: Iterator[Scored]) =>
-        val heap = mutable.PriorityQueue.empty[Scored](ord)
-        it.foreach { s =>
-          if (heap.size < k) heap.enqueue(s)
-          else if (ord.lt(s, heap.head)) { heap.dequeue(); heap.enqueue(s) }
-        }
-        heap.dequeueAll.sorted(ord)
-      }
+    topKPerQuery(scored, k)
   }
 
   /** Distributed Lloyd iterations over the FULL corpus — the
@@ -465,49 +442,38 @@ object Similarity {
   }
 
   /** Embedding-cosine near-duplicate pairs above a threshold, via LSH
-    * buckets (deterministic seeded planes) + exact verification —
-    * the embedding leg of the dedup family.
+    * buckets (deterministic seeded planes, [[LshPairs.hyperplaneBands]])
+    * + exact verification — the embedding leg of the dedup family.
     *
     * Scale shape: the (table, bucket) exchange carries ids only —
-    * embeddings join back once per surviving candidate pair — and every
-    * bucket is capped at `maxBucket` rows ([[LshPairs.cappedIdPairs]])
-    * so a duplicate-heavy corpus cannot produce a quadratic task.
+    * embeddings join back once per surviving candidate pair
+    * ([[LshPairs.verifyJoin]]) — and every bucket is capped at
+    * `maxBucket` rows so a duplicate-heavy corpus cannot produce a
+    * quadratic task.
     */
   def cosineNearDups(spark: SparkSession, emb: DataFrame, idCol: String,
                      vecCol: String, threshold: Double,
                      tables: Int = 8, bits: Int = 10,
                      seed: Long = 7L, maxBucket: Int = 1024): DataFrame = {
-    import spark.implicits._
     val base = emb.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
-    // one codegen'd pass per row (HashOps.hyperplaneSigs) — signatures
-    // bit-identical to the former per-table signatureAt mapPartitions,
-    // without decoding every vector into an external Array[Float]
-    val banded = base
-      .select(col("id"),
-              posexplode(HashOps.hyperplane_sigs_col(col("vec"), tables, bits,
-                                                     seed))
-                .as(Seq("band", "bucket")))
-      .select(col("band"), col("bucket"), col("id"))
-    // pair set pinned once, vector lookup pruned to pair-surviving ids
-    // (same shape as Dedup.minhashNearDups, measured-size broadcast
-    // guards included): embeddings of unpaired rows never ride the
-    // verify join's exchange
-    val pairsRaw = LshPairs.cappedIdPairs(banded, maxBucket).localCheckpoint()
-    val nPairRows = pairsRaw.count()
-    val pairIds = pairsRaw
-      .select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
-    val idsSide = LshPairs.broadcastIfFits(pairIds, 2L * nPairRows, 24L)
-    val pairSide = LshPairs.broadcastIfFits(pairsRaw, nPairRows, 48L)
-    val lookup = base.join(idsSide, Seq("id"), "left_semi")
-    // codegen'd verify kernel (HashOps.cosineRint4 — Similarity.cosine's
-    // exact fold + the rint rounding): no per-pair external decode of
-    // two float arrays, which dominated verification at the ~10^6
-    // random-collision candidate scale
-    pairSide
-      .join(lookup.select(col("id").as("id_a"), col("vec").as("va")), "id_a")
-      .join(lookup.select(col("id").as("id_b"), col("vec").as("vb")), "id_b")
-      .select(col("id_a"), col("id_b"),
-              HashOps.cosine_rint4_col(col("va"), col("vb")).as("cosine"))
-      .filter(col("cosine") >= threshold)
+    // untagged candidates and no index append: one action, unpinned
+    // (LshPairs' prune rule)
+    LshPairs.verifyJoin(
+        LshPairs.cappedIdPairs(LshPairs.hyperplaneBands(base, tables, bits, seed),
+                               maxBucket),
+        base, pinned = false)
+      .transform(cosineAtLeast(threshold))
   }
+
+  /** (id_a, id_b, cosine) of verified pairs whose vectors (payload_a,
+    * payload_b) reach `threshold`. The codegen'd verify kernel
+    * (HashOps.cosineRint4 — [[cosine]]'s exact fold + the rint rounding)
+    * reads the two float arrays in place, with no per-pair decode.
+    */
+  private[ops] def cosineAtLeast(threshold: Double)(pairs: DataFrame): DataFrame =
+    pairs
+      .select(col("id_a"), col("id_b"),
+              HashOps.cosine_rint4_col(col("payload_a"), col("payload_b"))
+                .as("cosine"))
+      .filter(col("cosine") >= threshold)
 }

@@ -764,17 +764,40 @@ class IncrementalLshSpec extends SparkSuite {
     assert(batch.nonEmpty, "fixture lost its planted exact dups")
   }
 
+  test("a bands slot written without the tag column still verifies at threshold 1.0") {
+    // an index written before postings carried `tag` reads back with
+    // tag = null; such a posting must pair with any tag and leave the
+    // decision to exact Jaccard. Originals arrive in round 0, their
+    // planted exact copies in round 1, so every true pair crosses the
+    // tagless slot.
+    val idx = tmpDir("inclsh-tagless-")
+    val round0 = corpus.filter(col("id") < 10000)
+    val r0 = IncrementalLsh.roundPairs(spark, idx, round0, "id", "text",
+                                       3, 32, 4, threshold = 1.0)
+      .as[(Long, Long, Double)].collect()
+    val live = graft.ops.RoundSlots.genDir(idx, graft.ops.RoundSlots.activeGen(idx))
+    IncrementalLsh.bands(round0, "id", "text").select("band", "bucket", "id")
+      .write.mode("overwrite").parquet(s"$live/bands/r0")
+    val r1 = IncrementalLsh.roundPairs(spark, idx, corpus.filter(col("id") >= 10000),
+                                       "id", "text", 3, 32, 4, threshold = 1.0)
+      .as[(Long, Long, Double)].collect()
+    val batch = Dedup.minhashNearDups(corpus, "id", "text", 3, 32, 4, 1.0)
+      .as[(Long, Long, Double)].collect().toSet
+    assert(r1.exists(_._1 < 10000), "no pair crossed the tagless slot")
+    assert((r0 ++ r1).toSet == batch)
+  }
+
   test("cappedNewPairs matchTag suppresses sig-unequal candidates at emission") {
     // same bucket, tags differ -> no pair even though ids co-bucket;
     // equal tags pair as before; untagged mode ignores the column
     val old = Seq((0, 10L, 1L, 7L), (0, 10L, 2L, 8L))
       .toDF("band", "bucket", "id", "tag")
     val neu = Seq((0, 10L, 3L, 7L)).toDF("band", "bucket", "id", "tag")
-    val tagged = IncrementalLsh.cappedNewPairs(old, neu, cap = 16,
-                                               matchTag = true)
+    val tagged = graft.ops.LshPairs.cappedNewPairs(old, neu, cap = 16,
+                                                   matchTag = true)
       .as[(Long, Long)].collect().toSet
     assert(tagged == Set((1L, 3L)))
-    val untagged = IncrementalLsh.cappedNewPairs(old, neu, cap = 16)
+    val untagged = graft.ops.LshPairs.cappedNewPairs(old, neu, cap = 16)
       .as[(Long, Long)].collect().toSet
     assert(untagged == Set((1L, 3L), (2L, 3L)))
   }
@@ -890,7 +913,7 @@ class IncrementalLshSpec extends SparkSuite {
   test("cappedNewPairs suppresses old-old pairs and counts drops") {
     val old = Seq((0, 10L, 1L), (0, 10L, 2L)).toDF("band", "bucket", "id")
     val neu = Seq((0, 10L, 3L), (0, 99L, 9L)).toDF("band", "bucket", "id")
-    val pairs = IncrementalLsh.cappedNewPairs(old, neu, cap = 16)
+    val pairs = graft.ops.LshPairs.cappedNewPairs(old, neu, cap = 16)
       .as[(Long, Long)].collect().toSet
     // (1,2) is old-old: already emitted when 2 arrived — suppressed now;
     // bucket 99 has a single member: no pair
@@ -901,7 +924,7 @@ class IncrementalLshSpec extends SparkSuite {
                    (0, 5L, 6L)).toDF("band", "bucket", "id")
     val neu2 = Seq((0, 5L, 3L)).toDF("band", "bucket", "id")
     val acc = spark.sparkContext.longAccumulator("incr_dropped")
-    val p2 = IncrementalLsh.cappedNewPairs(old2, neu2, cap = 3, acc = Some(acc))
+    val p2 = graft.ops.LshPairs.cappedNewPairs(old2, neu2, cap = 3, acc = Some(acc))
       .as[(Long, Long)].collect().toSet
     assert(p2 == Set((1L, 3L), (2L, 3L)))
     assert(acc.value == 3L, s"dropped: ${acc.value}")
@@ -916,7 +939,7 @@ class IncrementalLshSpec extends SparkSuite {
       corpus.filter(pmod(col("id"), lit(2)) === 0), "id", "text")
     val newBands = IncrementalLsh.bands(
       corpus.filter(pmod(col("id"), lit(2)) === 1), "id", "text")
-    val pairs = IncrementalLsh.cappedNewPairs(oldBands, newBands, cap = 1024)
+    val pairs = graft.ops.LshPairs.cappedNewPairs(oldBands, newBands, cap = 1024)
     val plan: SparkPlan = pairs.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.initialPlan
       case p                        => p
@@ -934,7 +957,7 @@ class IncrementalLshSpec extends SparkSuite {
     // into; the semi-join must prune them all before the groupBy
     val old = (0L until 1000L).map(i => (0, 1000L + i, i)).toDF("band", "bucket", "id")
     val neu = Seq((0, 7L, 5000L), (0, 7L, 5001L)).toDF("band", "bucket", "id")
-    val pairs = IncrementalLsh.cappedNewPairs(old, neu, cap = 16)
+    val pairs = graft.ops.LshPairs.cappedNewPairs(old, neu, cap = 16)
       .as[(Long, Long)].collect().toSet
     assert(pairs == Set((5000L, 5001L)))
   }
@@ -1027,13 +1050,13 @@ class IncrementalAnnSpec extends SparkSuite {
       // guard's own decision via the row-count arithmetic too)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
       assert(n * 48L > 1024L)
-      val big = IncrementalLsh.joinPairsToLookup(spark, pairs, n, lookup)
+      val big = graft.ops.LshPairs.verifyJoin(pairs, lookup, pinned = true)
       assert(big.count() == n) // completes, correct cardinality
       assert(countIn(big, "BroadcastHashJoin") == 0,
              "guard must not broadcast an over-limit pair set")
       // and with a generous limit the pair side IS broadcast
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (10 << 20).toString)
-      val small = IncrementalLsh.joinPairsToLookup(spark, pairs, n, lookup)
+      val small = graft.ops.LshPairs.verifyJoin(pairs, lookup, pinned = true)
       assert(countIn(small, "BroadcastHashJoin") >= 2,
              "expected broadcast pair joins")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)

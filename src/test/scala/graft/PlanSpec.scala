@@ -186,6 +186,59 @@ class PlanSpec extends SparkSuite {
     assert(plan.contains("FileScan parquet"), s"no direct scan:\n$plan")
   }
 
+  test("q35 signs vectors in the codegen'd kernel: no typed pass in the signature stage") {
+    import org.apache.spark.sql.execution.{DeserializeToObjectExec, MapPartitionsExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val plan = SparkEntry.queries("q35_ann_lsh")(spark, dir).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.initialPlan
+      case p                        => p
+    }
+    assert(plan.toString.contains("hyperplanesigs"), s"no hyperplane kernel:\n$plan")
+    // a stage: what one exchange's child reaches without crossing another
+    def stage(p: SparkPlan): Seq[SparkPlan] = p +: p.children.flatMap {
+      case _: Exchange => Nil
+      case c           => stage(c)
+    }
+    val signing = (plan +: plan.collect { case e: Exchange => e.child })
+      .map(stage)
+      .filter(_.exists(_.expressions.exists(
+        _.exists(_.isInstanceOf[graft.ops.HyperplaneSigsExpression]))))
+    assert(signing.nonEmpty, s"no stage evaluates the hyperplane kernel:\n$plan")
+    signing.flatten.foreach {
+      case n @ (_: DeserializeToObjectExec | _: MapPartitionsExec) =>
+        fail(s"typed pass in the signature stage: ${n.nodeName}\n$plan")
+      case _ =>
+    }
+  }
+
+  private def checkpointed(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r
+    }.isDefined
+
+  private lazy val nearDupDocs = spark.read.parquet(s"$dir/documents.parquet")
+    .select(col("doc_id").as("id"), col("text"))
+  private lazy val nearDupVecs = spark.read.parquet(s"$dir/embeddings.parquet")
+    .select(col("vec_id").as("id"), col("embedding").as("vec"))
+
+  test("untagged batch near-dup verify is one action: no eager checkpoint") {
+    import graft.ops.{Dedup, Similarity}
+    assert(!checkpointed(Dedup.minhashNearDups(nearDupDocs, "id", "text", threshold = 0.5)))
+    assert(!checkpointed(Dedup.simhashNearDups(nearDupDocs, "id", "text")))
+    assert(!checkpointed(Similarity.cosineNearDups(spark, nearDupVecs, "id", "vec",
+                                                   threshold = 0.9)))
+  }
+
+  test("tag-matched and index-appending verify stays pinned: eager checkpoint") {
+    import graft.ops.{Dedup, IncrementalAnn, IncrementalLsh}
+    assert(checkpointed(Dedup.minhashNearDups(nearDupDocs, "id", "text", threshold = 1.0)))
+    assert(checkpointed(IncrementalLsh.roundPairs(
+      spark, tmpDir("planspec-lsh-"), nearDupDocs, "id", "text", threshold = 1.0)))
+    assert(checkpointed(IncrementalAnn.roundPairs(
+      spark, tmpDir("planspec-ann-"), nearDupVecs, "id", "vec", threshold = 0.9)))
+  }
+
   test("quantile sketch: one scan, map-side combine before the only data-scale exchange") {
     val plan = planOf(SparkEntry.queries("q102_hist_quantiles")(spark, dir))
     // the raw table is read ONCE — the group-total is a window over
